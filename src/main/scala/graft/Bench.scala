@@ -12,6 +12,27 @@ import org.apache.spark.sql.SparkSession
   * a downstream consumer would pay.
   */
 object Bench {
+  /** JSON-escape one string value (r20 ADVICE #3: a SPARK_GRAFT_ENV_NOTE
+    * carrying a quote/backslash/control char produced an invalid JSON
+    * artifact).
+    */
+  private[graft] def jesc(raw: String): String = raw.flatMap {
+    case '"' => "\\\""
+    case '\\' => "\\\\"
+    case c if c < ' ' => f"\\u${c.toInt}%04x"
+    case c => c.toString
+  }
+
+  /** `raw` JSON-escaped and cut to at most `n` characters of escaped
+    * text: escaping comes first, so quotes and control characters count
+    * at their escaped width, and whole code points are kept, so the cut
+    * never splits an escape sequence or a surrogate pair.
+    */
+  private[graft] def jescWithin(raw: String, n: Int): String =
+    raw.codePoints().toArray.iterator
+      .map(cp => jesc(new String(Character.toChars(cp))))
+      .scanLeft("")(_ + _).takeWhile(_.length <= n).toSeq.last
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
@@ -187,19 +208,6 @@ object Bench {
     // unknowingly). The driver never sets the env var; the default
     // names the one health metric the line already carries so a
     // cross-round comparison knows what to check first.
-    // JSON-escape the note (r20 ADVICE #3: a SPARK_GRAFT_ENV_NOTE
-    // carrying a quote/backslash/control char produced an invalid JSON
-    // artifact; and a blind take(60) could split a surrogate pair)
-    def jesc(raw: String): String = raw.flatMap {
-      case '"' => "\\\""
-      case '\\' => "\\\\"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    }
-    def takeWhole(raw: String, n: Int): String = {
-      val t = raw.take(n)
-      if (t.nonEmpty && Character.isHighSurrogate(t.last)) t.dropRight(1) else t
-    }
     val envNote = jesc(sys.env.getOrElse("SPARK_GRAFT_ENV_NOTE",
       "shared host, no isolation; cross-round deltas need an interleaved A/B " +
         "or a same-round control family - check spread_med first"))
@@ -223,10 +231,11 @@ object Bench {
       .mkString("{", ",", "}")
     // env_note rides the STDOUT line too (r19 VERDICT #2: only the file
     // line carried it, so the driver artifact — built from stdout's tail —
-    // shipped without the health note). The stdout copy is truncated to
-    // keep the line inside the driver's ~2000-char tail capture.
+    // shipped without the health note). The stdout copy is cut to 60
+    // escaped characters to keep the line inside the ~2000-char stdout
+    // tail that is captured.
     val envNote2 = sys.env.get("SPARK_GRAFT_ENV_NOTE")
-      .map(n => jesc(takeWhole(n, 60)))
+      .map(n => jescWithin(n, 60))
       .getOrElse("shared host, no isolation - check spread_med")
     val stdoutLine = s"""{"metric":"total","value":${fmt(total)},"unit":"sec","queries":$qs2,"families":$fams,"sf":"$sfDir","runs":2,"degraded":$deg,"spread_med":${fmt(spreadMed)},"env_note":"$envNote2"}"""
     println(stdoutLine)

@@ -3,7 +3,7 @@ package graft.llm
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables
-import graft.runtime.{IndexManifest, IndexStatePublisher, IndexStore}
+import graft.runtime.{IndexManifest, IndexStatePublisher, IndexStore, Tombstones}
 
 /** Incremental corpus-append deduplication (d39) — the operator a daily
   * ingest pipeline runs most often: dedup a DELTA batch against the
@@ -251,8 +251,9 @@ object IncrementalDedup {
     * immutable directories, so no concurrent mutation can tear a read).
     * The probe-side tables are written BUCKETED on their probe keys —
     * the write-once cost that buys every later delta pass its
-    * shuffle-free corpus side; `meta` records the band geometry so a
-    * reader can neither mis-band nor mis-bucket. Rewritten-per-mutation
+    * shuffle-free corpus side; the manifest's geometry (`k`,
+    * `rows_per_band`, `n_buckets`) records the band layout so a reader
+    * can neither mis-band nor mis-bucket. Rewritten-per-mutation
     * artifacts (`labels`, tombstones) live in generation directories;
     * appended artifacts (`sigs`, `pairs`) in epoch directories.
     */
@@ -265,14 +266,10 @@ object IncrementalDedup {
         Dedup.bandsOf(idx.sigs, k, rowsPerBand),
         "hashes", "bands", "bandcounts", nBuckets),
       () => idx.sigs.write.mode("overwrite").parquet(s"$dir/sigs/epoch-0"),
-      () => idx.labels.write.mode("overwrite").parquet(s"$dir/labels/gen-0"),
-      () => s.range(1).selectExpr(s"$k AS k", s"$rowsPerBand AS rows_per_band",
-          s"$nBuckets AS n_buckets")
-        .write.mode("overwrite").parquet(s"$dir/meta")) ++
+      () => idx.labels.write.mode("overwrite").parquet(s"$dir/labels/gen-0")) ++
       idx.pairs.map(p => () => p.write.mode("overwrite").parquet(s"$dir/pairs/epoch-0")) ++
       capLedger0.map(l => () => l.select(col("band"), col("bsig"))
         .write.mode("overwrite").parquet(s"$dir/capledger/epoch-0")): _*)
-    graft.runtime.MetaCache.invalidate(dir) // meta just (re)written
     val entries = Map(
       "hashes" -> "hashes", "bands" -> "bands", "bandcounts" -> "bandcounts",
       "sigs" -> "sigs", "labels" -> "labels/gen-0") ++
@@ -281,7 +278,8 @@ object IncrementalDedup {
     val epochs = Map("sigs" -> 0) ++
       (if (idx.pairs.nonEmpty) Map("pairs" -> 0) else Map.empty) ++
       (if (capLedger0.nonEmpty) Map("capledger" -> 0) else Map.empty)
-    IndexStatePublisher.publish(dir, IndexManifest(0L, entries, epochs))
+    IndexStatePublisher.publish(dir, IndexManifest(0L, entries, epochs,
+      Map("k" -> k, "rows_per_band" -> rowsPerBand, "n_buckets" -> nBuckets)))
   }
 
   /** The three bucketed probe tables, written fresh at `relHashes` /
@@ -322,19 +320,9 @@ object IncrementalDedup {
     readIndexAt(s, dir, IndexStatePublisher.current(dir))
 
   private def readIndexAt(s: SparkSession, dir: String, m: IndexManifest): CorpusIndex = {
-    val meta = graft.runtime.MetaCache.row(s, dir)
-    val (k, rpb, nb) = (meta.getInt(0), meta.getInt(1), meta.getInt(2))
-    val del: Option[DataFrame] = m.pathOpt("deleted")
-      .map(rel => broadcast(s.read.parquet(s"$dir/$rel")))
-    def minusDel(df: DataFrame, idCol: String): DataFrame = del match {
-      // re-select the original order: a USING-key anti-join moves the key
-      // column first, which would silently swap (a_id, b_id) in the pair
-      // artifact for positional consumers
-      case Some(d) =>
-        df.join(d.withColumnRenamed("doc_id", idCol), Seq(idCol), "left_anti")
-          .select(df.columns.map(col).toIndexedSeq: _*)
-      case None => df
-    }
+    val (k, rpb, nb) =
+      (m.geom(dir, "k"), m.geom(dir, "rows_per_band"), m.geom(dir, "n_buckets"))
+    val minusDel = Tombstones.filter(s, dir, m, "doc_id")
     val pairs = m.pathOpt("pairs").map(_ => minusDel(minusDel(
       s.read.parquet(m.epochPaths(dir, "pairs"): _*), "a_id"), "b_id"))
     CorpusIndex(
@@ -639,8 +627,8 @@ object IncrementalDedup {
     */
   def rerunKeptWithLedger(s: SparkSession, dir: String, docsWithEpoch: DataFrame,
       estMin: Double = 0.6, jaccardMin: Double = 0.8): DataFrame = {
-    val meta = graft.runtime.MetaCache.row(s, dir)
-    val (k, rpb) = (meta.getInt(0), meta.getInt(1))
+    val m = IndexStatePublisher.current(dir)
+    val (k, rpb) = (m.geom(dir, "k"), m.geom(dir, "rows_per_band"))
     val sigs = docsWithEpoch.select(col("doc_id"),
       graft.functions.MinHashSig(col("text"), 5, k).as("sig"))
     val firstOver = readCapLedger(s, dir)
@@ -761,10 +749,6 @@ object IncrementalDedup {
         Seq("content_hash"))
       .filter(col("doc_id") =!= col("min_id"))
       .select(col("min_id").as("a_id"), col("doc_id").as("b_id"))
-    // the FULL surviving tombstone list is rewritten per generation
-    // (delete traffic is small by contract): one manifest resolution
-    // then gives a reader a consistent (labels, tombstones) pair —
-    // appending to a live tombstone dir could tear exactly that pairing.
     // The touched-cluster re-resolution is this mutation's HEAVY compute
     // (an iterative multi-job resolve); run it to completion BEFORE any
     // artifact write and overlap only the two cheap writes below (r20
@@ -780,18 +764,13 @@ object IncrementalDedup {
       .select(col("id"), col("cluster"))
     val newLabels = untouched.unionByName(subLabels.select(col("id"), col("cluster")))
       .transform(graft.runtime.Ckpt.eager) // materialize BEFORE publishing over its input gen
+    var deleted: String = null
     graft.runtime.Par.run( // two independent writes — overlap (guide §2.6)
-      () => {
-        val allDel = m.pathOpt("deleted")
-          .map(rel => s.read.parquet(s"$dir/$rel").unionByName(del).distinct())
-          .getOrElse(del)
-          .transform(graft.runtime.Ckpt.eager)
-        allDel.write.mode("overwrite").parquet(s"$dir/deleted/gen-${m.gen + 1}")
-      },
+      () => deleted = Tombstones.write(s, dir, m, del, "doc_id"),
       () => newLabels.write.mode("overwrite").parquet(s"$dir/labels/gen-${m.gen + 1}"))
     IndexStatePublisher.publish(dir, m
       .withEntry("labels", s"labels/gen-${m.gen + 1}")
-      .withEntry("deleted", s"deleted/gen-${m.gen + 1}")
+      .withEntry("deleted", deleted)
       .copy(gen = m.gen + 1))
     newLabels
   }
@@ -815,9 +794,8 @@ object IncrementalDedup {
     val m = IndexStatePublisher.current(dir)
     require(m.pathOpt("capledger").nonEmpty,
       s"index at $dir is not ledgered — use compactIndex")
-    val meta = graft.runtime.MetaCache.row(s, dir)
-    val (k, rpb, nb) = (meta.getInt(0), meta.getInt(1), meta.getInt(2))
     val idx = readIndexAt(s, dir, m) // tombstone-filtered views
+    val (k, rpb, nb) = (idx.bandK, idx.bandRows, idx.nBuckets)
     val survN = idx.hashes.count()
     val gotN = corpus.count()
     require(gotN == survN,
@@ -842,7 +820,7 @@ object IncrementalDedup {
         "bandcounts" -> s"bandcounts-g$g", "sigs" -> s"sigs-g$g",
         "labels" -> s"labels/gen-$g", "pairs" -> s"pairs-g$g",
         "capledger" -> s"capledger-g$g"),
-      Map("sigs" -> 0, "pairs" -> 0, "capledger" -> 0)))
+      Map("sigs" -> 0, "pairs" -> 0, "capledger" -> 0), m.geometry))
   }
 
   /** Rebuild-time COMPACTION — the scheduled physical half of deletion
@@ -880,9 +858,8 @@ object IncrementalDedup {
         "ledger and break the rerun contract — use " +
         "rebuildLedgered(dir, corpus, ...) instead")
     if (m.pathOpt("deleted").nonEmpty) {
-      val meta = graft.runtime.MetaCache.row(s, dir)
-      val (k, rpb, nb) = (meta.getInt(0), meta.getInt(1), meta.getInt(2))
       val idx = readIndexAt(s, dir, m)
+      val (k, rpb, nb) = (idx.bandK, idx.bandRows, idx.nBuckets)
       val hashes = idx.hashes.transform(graft.runtime.Ckpt.eager)
       val sigs = idx.sigs.transform(graft.runtime.Ckpt.eager)
       val labels = idx.labels.transform(graft.runtime.Ckpt.eager)
@@ -902,7 +879,7 @@ object IncrementalDedup {
         (if (pairs.nonEmpty) Map("pairs" -> s"pairs-g$g") else Map.empty)
       val epochs = Map("sigs" -> 0) ++
         (if (pairs.nonEmpty) Map("pairs" -> 0) else Map.empty)
-      IndexStatePublisher.publish(dir, IndexManifest(g, entries, epochs))
+      IndexStatePublisher.publish(dir, IndexManifest(g, entries, epochs, m.geometry))
     }
   }
 

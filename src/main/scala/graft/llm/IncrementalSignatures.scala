@@ -3,6 +3,7 @@ package graft.llm
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables
+import graft.runtime.Tombstones
 
 /** Incremental corpus-append arms for the remaining signature families
   * of the corpus index (r14 VERDICT ask #5) — the d39 pattern (persist
@@ -114,18 +115,15 @@ object IncrementalSig {
     graft.runtime.Par.run(Seq( // independent writes — overlap (guide §2.6)
       () => writeBandTables(s, dir, bandsOfSig(corpusSigs, bits, nBands),
         "bands", "bandcounts", nBuckets),
-      () => pairs.write.mode("overwrite").parquet(s"$dir/pairs/epoch-0"),
-      () => s.range(1).selectExpr(s"$bits AS bits", s"$nBands AS n_bands",
-          s"$nBuckets AS n_buckets")
-        .write.mode("overwrite").parquet(s"$dir/meta")) ++
+      () => pairs.write.mode("overwrite").parquet(s"$dir/pairs/epoch-0")) ++
       capLedger0.map(l => () => l.select(col("band"), col("bsig"))
         .write.mode("overwrite").parquet(s"$dir/capledger/epoch-0")): _*)
-    graft.runtime.MetaCache.invalidate(dir) // meta just (re)written
     IndexStatePublisher.publish(dir, IndexManifest(0L,
       Map("bands" -> "bands", "bandcounts" -> "bandcounts", "pairs" -> "pairs") ++
         (if (capLedger0.nonEmpty) Map("capledger" -> "capledger") else Map.empty),
       Map("pairs" -> 0) ++
-        (if (capLedger0.nonEmpty) Map("capledger" -> 0) else Map.empty)))
+        (if (capLedger0.nonEmpty) Map("capledger" -> 0) else Map.empty),
+      Map("bits" -> bits, "n_bands" -> nBands, "n_buckets" -> nBuckets)))
   }
 
   /** Load the index at its CURRENT published generation (one manifest
@@ -138,19 +136,9 @@ object IncrementalSig {
   def readIndex(s: SparkSession, dir: String): SigIndex = {
     import graft.runtime.{IndexStatePublisher, IndexStore}
     val m = IndexStatePublisher.current(dir)
-    val meta = graft.runtime.MetaCache.row(s, dir)
-    val (bits, nBands, nb) = (meta.getInt(0), meta.getInt(1), meta.getInt(2))
-    val del: Option[DataFrame] = m.pathOpt("deleted")
-      .map(rel => broadcast(s.read.parquet(s"$dir/$rel")))
-    def minusDel(df: DataFrame, idCol: String): DataFrame = del match {
-      // re-select the original order: a USING-key anti-join moves the key
-      // column first, which would silently swap (a_id, b_id) in the pair
-      // artifact for positional consumers
-      case Some(d) =>
-        df.join(d.withColumnRenamed("doc_id", idCol), Seq(idCol), "left_anti")
-          .select(df.columns.map(col).toIndexedSeq: _*)
-      case None => df
-    }
+    val (bits, nBands, nb) =
+      (m.geom(dir, "bits"), m.geom(dir, "n_bands"), m.geom(dir, "n_buckets"))
+    val minusDel = Tombstones.filter(s, dir, m, "doc_id")
     SigIndex(
       minusDel(IndexStore.ensureBucketedTable(s, bandTable(s"$dir/${m.path("bands")}"),
         "doc_id BIGINT, sig BIGINT, band INT, bsig BIGINT",
@@ -192,14 +180,8 @@ object IncrementalSig {
     import graft.runtime.IndexStatePublisher
     IndexStatePublisher.withWriterLock(dir) {
       val m = IndexStatePublisher.current(dir)
-      val del = deleteIds.select(col("doc_id").cast("long").as("doc_id"))
-      val allDel = m.pathOpt("deleted")
-        .map(rel => s.read.parquet(s"$dir/$rel").unionByName(del).distinct())
-        .getOrElse(del)
-        .transform(graft.runtime.Ckpt.eager)
-      allDel.write.mode("overwrite").parquet(s"$dir/deleted/gen-${m.gen + 1}")
       IndexStatePublisher.publish(dir, m
-        .withEntry("deleted", s"deleted/gen-${m.gen + 1}")
+        .withEntry("deleted", Tombstones.write(s, dir, m, deleteIds, "doc_id"))
         .copy(gen = m.gen + 1))
     }
   }
@@ -232,9 +214,8 @@ object IncrementalSig {
       val m = IndexStatePublisher.current(dir)
       require(m.pathOpt("capledger").nonEmpty,
         s"signature index at $dir is not ledgered — use compactIndex")
-      val meta = graft.runtime.MetaCache.row(s, dir)
-      val (bits, nBands, nb) = (meta.getInt(0), meta.getInt(1), meta.getInt(2))
       val idx = readIndex(s, dir) // tombstone-filtered views
+      val (bits, nBands, nb) = (idx.bits, idx.nBands, m.geom(dir, "n_buckets"))
       val survSigs = idx.bands.select(col("doc_id"), col("sig")).distinct()
         .transform(graft.runtime.Ckpt.eager)
       val (pairs, over0) = buildPairsWithLedger(survSigs, bits, nBands,
@@ -250,7 +231,7 @@ object IncrementalSig {
       IndexStatePublisher.publish(dir, IndexManifest(g,
         Map("bands" -> s"bands-g$g", "bandcounts" -> s"bandcounts-g$g",
           "pairs" -> s"pairs-g$g", "capledger" -> s"capledger-g$g"),
-        Map("pairs" -> 0, "capledger" -> 0)))
+        Map("pairs" -> 0, "capledger" -> 0), m.geometry))
     }
   }
 
@@ -276,7 +257,7 @@ object IncrementalSig {
           "the cap ledger and break the rerun contract — use " +
           "rebuildLedgered(dir, maxHamming, bucketCap) instead")
       if (m.pathOpt("deleted").nonEmpty) {
-        val nb = graft.runtime.MetaCache.row(s, dir).getInt(2)
+        val nb = m.geom(dir, "n_buckets")
         val idx = readIndex(s, dir) // tombstone-filtered views
         val bands = idx.bands.transform(graft.runtime.Ckpt.eager)
         val pairs = idx.pairs.transform(graft.runtime.Ckpt.eager)
@@ -286,7 +267,7 @@ object IncrementalSig {
         IndexStatePublisher.publish(dir, IndexManifest(g,
           Map("bands" -> s"bands-g$g", "bandcounts" -> s"bandcounts-g$g",
             "pairs" -> s"pairs-g$g"),
-          Map("pairs" -> 0)))
+          Map("pairs" -> 0), m.geometry))
       }
     }
   }
@@ -402,7 +383,7 @@ object IncrementalSig {
     IndexStatePublisher.withWriterLock(dir) {
       val m = IndexStatePublisher.current(dir)
       val idx = readIndex(s, dir)
-      val nb = graft.runtime.MetaCache.row(s, dir).getInt(2)
+      val nb = m.geom(dir, "n_buckets")
       val (db0, newPairs0, over) = deltaPairs(idx, deltaSigs, maxHamming, bucketCap)
       val newPairs = newPairs0.transform(graft.runtime.Ckpt.eager)
       val pairEpoch = m.epochs.getOrElse("pairs", -1) + 1
@@ -472,8 +453,7 @@ object IncrementalSig {
   def rerunWithLedger(s: SparkSession, dir: String,
       sigsWithEpoch: DataFrame, maxHamming: Int): DataFrame = {
     val m = graft.runtime.IndexStatePublisher.current(dir)
-    val meta = graft.runtime.MetaCache.row(s, dir)
-    val (bits, nBands) = (meta.getInt(0), meta.getInt(1))
+    val (bits, nBands) = (m.geom(dir, "bits"), m.geom(dir, "n_bands"))
     // Suppression is MONOTONE: bucket population over visible docs only
     // grows with the epoch, so "over cap at epoch k ⇒ over at every
     // k' > k" — a bucket's ledger rows form a suffix [firstOver, K].
@@ -778,10 +758,7 @@ object IncrementalSemantic {
       () => graft.runtime.IndexStore.writeBucketed(buckets, nBuckets,
         s"$dir/buckets", tableFor(s"$dir/buckets"), "overwrite",
         "table_id", "bucket"),
-      () => labels.write.mode("overwrite").parquet(s"$dir/labels/gen-0"),
-      () => s.range(1).selectExpr(s"$nBuckets AS n_buckets",
-          s"$nTables AS n_tables", s"$bits AS bits")
-        .write.mode("overwrite").parquet(s"$dir/meta")) ++
+      () => labels.write.mode("overwrite").parquet(s"$dir/labels/gen-0")) ++
       (if (ledgered) Seq(
         () => graft.runtime.IndexStore.writeBucketed(
           buckets.groupBy(col("table_id"), col("bucket")).agg(count(lit(1)).as("cn")),
@@ -793,7 +770,6 @@ object IncrementalSemantic {
       else
         pairs.map(p => () => p.write.mode("overwrite").parquet(s"$dir/pairs/gen-0")).toSeq)
     graft.runtime.Par.run(writes: _*)
-    graft.runtime.MetaCache.invalidate(dir) // meta just (re)written
     val entries =
       if (ledgered)
         Map("buckets" -> "buckets", "labels" -> "labels/gen-0",
@@ -805,7 +781,8 @@ object IncrementalSemantic {
     val epochs =
       if (ledgered) Map("pairs" -> 0, "capledger" -> 0)
       else Map.empty[String, Int]
-    IndexStatePublisher.publish(dir, IndexManifest(0L, entries, epochs))
+    IndexStatePublisher.publish(dir, IndexManifest(0L, entries, epochs,
+      Map("n_buckets" -> nBuckets, "n_tables" -> nTables, "bits" -> bits)))
   }
 
   /** Load the index at its CURRENT published generation (one manifest
@@ -816,21 +793,9 @@ object IncrementalSemantic {
     */
   def readIndex(s: SparkSession, dir: String): SemIndex = {
     val m = graft.runtime.IndexStatePublisher.current(dir)
-    val meta = graft.runtime.MetaCache.row(s, dir)
-    // geometry rode into meta in r16 (the scale arm runs count-calibrated
-    // bits); a pre-r16 meta has only n_buckets — fall back to the pinned
-    // constants it was written under
-    val nb = meta.getInt(0)
-    val (nt, bits) =
-      if (meta.length >= 3) (meta.getInt(1), meta.getInt(2)) else (NTables, Bits)
-    val del: Option[DataFrame] = m.pathOpt("deleted")
-      .map(rel => broadcast(s.read.parquet(s"$dir/$rel")))
-    def minusDel(df: DataFrame, idCol: String): DataFrame = del match {
-      case Some(d) =>
-        df.join(d.withColumnRenamed("vec_id", idCol), Seq(idCol), "left_anti")
-          .select(df.columns.map(col).toIndexedSeq: _*)
-      case None => df
-    }
+    val (nb, nt, bits) =
+      (m.geom(dir, "n_buckets"), m.geom(dir, "n_tables"), m.geom(dir, "bits"))
+    val minusDel = Tombstones.filter(s, dir, m, "vec_id")
     // pairs live in EPOCH dirs on a ledgered (maintained-append) index,
     // in a single gen-0 dir otherwise
     val pairs = m.pathOpt("pairs").map { rel =>
@@ -916,18 +881,13 @@ object IncrementalSemantic {
         .select(col("id"), col("cluster"))
       val newLabels = untouched.unionByName(subLabels.select(col("id"), col("cluster")))
         .transform(graft.runtime.Ckpt.eager) // materialize BEFORE publishing over its input gen
+      var deleted: String = null
       graft.runtime.Par.run( // two independent writes — overlap (guide §2.6)
-        () => {
-          val allDel = m.pathOpt("deleted")
-            .map(rel => s.read.parquet(s"$dir/$rel").unionByName(del).distinct())
-            .getOrElse(del)
-            .transform(graft.runtime.Ckpt.eager)
-          allDel.write.mode("overwrite").parquet(s"$dir/deleted/gen-${m.gen + 1}")
-        },
+        () => deleted = Tombstones.write(s, dir, m, del, "vec_id"),
         () => newLabels.write.mode("overwrite").parquet(s"$dir/labels/gen-${m.gen + 1}"))
       IndexStatePublisher.publish(dir, m
         .withEntry("labels", s"labels/gen-${m.gen + 1}")
-        .withEntry("deleted", s"deleted/gen-${m.gen + 1}")
+        .withEntry("deleted", deleted)
         .copy(gen = m.gen + 1))
       newLabels
     }
@@ -1171,10 +1131,8 @@ object IncrementalSemantic {
   def rerunKeptWithLedger(s: SparkSession, dir: String,
       vecsWithEpoch: DataFrame, minCos: Double = MinCos): DataFrame = {
     val m = graft.runtime.IndexStatePublisher.current(dir)
-    val meta = graft.runtime.MetaCache.row(s, dir)
-    val (nt, bits) =
-      if (meta.length >= 3) (meta.getInt(1), meta.getInt(2)) else (NTables, Bits)
-    val e = withSigs(vecsWithEpoch, nt, bits).transform(graft.runtime.Ckpt.eager)
+    val e = withSigs(vecsWithEpoch, m.geom(dir, "n_tables"), m.geom(dir, "bits"))
+      .transform(graft.runtime.Ckpt.eager)
     val firstOver = readCapLedger(s, dir)
       .groupBy(col("table_id"), col("bucket"))
       .agg(min(col("epoch")).as("first_over"))
@@ -1219,9 +1177,8 @@ object IncrementalSemantic {
       val m = IndexStatePublisher.current(dir)
       require(m.pathOpt("capledger").nonEmpty,
         s"semantic index at $dir is not ledgered — use compactIndex")
-      val meta = graft.runtime.MetaCache.row(s, dir)
-      val (nb, nt, bits) = (meta.getInt(0), meta.getInt(1), meta.getInt(2))
       val idx = readIndex(s, dir) // tombstone-filtered views
+      val (nb, nt, bits) = (idx.nBuckets, idx.nTables, idx.bits)
       val survN = idx.buckets.select(col("vec_id")).distinct().count()
       val gotN = allE.select(col("vec_id")).distinct().count()
       require(gotN == survN,
@@ -1252,7 +1209,7 @@ object IncrementalSemantic {
         Map("buckets" -> s"buckets-g$g", "bucketcounts" -> s"bucketcounts-g$g",
           "labels" -> s"labels/gen-$g", "pairs" -> s"pairs-g$g",
           "capledger" -> s"capledger-g$g"),
-        Map("pairs" -> 0, "capledger" -> 0)))
+        Map("pairs" -> 0, "capledger" -> 0), m.geometry))
     }
   }
 
@@ -1276,8 +1233,8 @@ object IncrementalSemantic {
           "cap ledger and break the rerun contract — use " +
           "rebuildLedgered(dir, allE, bucketCap) instead")
       if (m.pathOpt("deleted").nonEmpty) {
-        val nb = graft.runtime.MetaCache.row(s, dir).getInt(0)
         val idx = readIndex(s, dir)
+        val nb = idx.nBuckets
         val buckets = idx.buckets.transform(graft.runtime.Ckpt.eager)
         val pairs = idx.pairs.map(_.transform(graft.runtime.Ckpt.eager))
         val g = m.gen + 1
@@ -1549,7 +1506,9 @@ object IncrementalContam {
   private def tableFor(dir: String): String =
     graft.runtime.IndexStore.tableFor("graft_contam_grams_", dir)
 
+  /** Write + PUBLISH (manifest generation 0, as every index family). */
   def writeIndex(idx: ContamIndex, dir: String, nBuckets: Int = 32): Unit = {
+    import graft.runtime.{IndexManifest, IndexStatePublisher}
     val s = idx.grams.sparkSession
     val out = new java.io.FileOutputStream(s"$dir/bloom.bin")
     try idx.bloom.writeTo(out) finally out.close()
@@ -1557,22 +1516,22 @@ object IncrementalContam {
     graft.runtime.Par.run( // independent writes — overlap (guide §2.6)
       () => graft.runtime.IndexStore.writeBucketed(idx.grams, nBuckets,
         s"$dir/grams", tableFor(dir), "overwrite", "gk"),
-      () => idx.spans.write.mode("overwrite").parquet(s"$dir/spans"),
-      () => s.range(1).selectExpr(s"$nBuckets AS n_buckets")
-        .write.mode("overwrite").parquet(s"$dir/meta"))
-    graft.runtime.MetaCache.invalidate(dir) // meta just (re)written
+      () => idx.spans.write.mode("overwrite").parquet(s"$dir/spans"))
+    IndexStatePublisher.publish(dir, IndexManifest(0L,
+      Map("bloom" -> "bloom.bin", "grams" -> "grams", "spans" -> "spans"),
+      Map.empty, Map("n_buckets" -> nBuckets)))
   }
 
   def readIndex(s: SparkSession, dir: String): ContamIndex = {
-    val nb = graft.runtime.MetaCache.row(s, dir).getInt(0)
-    val in = new java.io.FileInputStream(s"$dir/bloom.bin")
+    val m = graft.runtime.IndexStatePublisher.current(dir)
+    val in = new java.io.FileInputStream(s"$dir/${m.path("bloom")}")
     val bloom =
       try org.apache.spark.util.sketch.BloomFilter.readFrom(in)
       finally in.close()
     ContamIndex(bloom,
       graft.runtime.IndexStore.ensureBucketedTable(s, tableFor(dir),
-        "gk BIGINT", "gk", nb, s"$dir/grams"),
-      s.read.parquet(s"$dir/spans"))
+        "gk BIGINT", "gk", m.geom(dir, "n_buckets"), s"$dir/${m.path("grams")}"),
+      s.read.parquet(s"$dir/${m.path("spans")}"))
   }
 
   /** d43: incremental corpus-append decontamination under the d29/d36

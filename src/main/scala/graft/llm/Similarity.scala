@@ -784,15 +784,29 @@ object Similarity {
     * so published state must be immutable-per-generation). `centroids`
     * is rewritten only at rebuild; `cells`/`codes` append per epoch.
     */
-  def writeIvfSq8Index(idx: IvfSq8Index, dir: String): Unit = {
+  def writeIvfSq8Index(idx: IvfSq8Index, dir: String): Unit =
+    publishIvfGeneration(idx, dir, 0L, "cells", "codes")
+
+  /** Write `idx` as generation `g` (centroids to `centroids/gen-g`,
+    * cells and codes to epoch 0 of `cellsRel`/`codesRel`) and publish it.
+    * The live cell count is counted on the centroid write itself (an
+    * observed metric, no extra job) and recorded as the `n_cells`
+    * geometry; a seed that captured no sample vector trains no centroid,
+    * so it can be below the requested count.
+    */
+  private def publishIvfGeneration(idx: IvfSq8Index, dir: String, g: Long,
+      cellsRel: String, codesRel: String): Unit = {
     import graft.runtime.{IndexManifest, IndexStatePublisher}
+    val cellCount = org.apache.spark.sql.Observation("n_cells")
     graft.runtime.Par.run( // independent writes — overlap (guide §2.6)
-      () => idx.centroids.write.mode("overwrite").parquet(s"$dir/centroids/gen-0"),
-      () => idx.cells.write.mode("overwrite").parquet(s"$dir/cells/epoch-0"),
-      () => idx.codes.write.mode("overwrite").parquet(s"$dir/codes/epoch-0"))
-    IndexStatePublisher.publish(dir, IndexManifest(0L,
-      Map("centroids" -> "centroids/gen-0", "cells" -> "cells", "codes" -> "codes"),
-      Map("cells" -> 0, "codes" -> 0)))
+      () => idx.centroids.observe(cellCount, count(lit(1)).as("n"))
+        .write.mode("overwrite").parquet(s"$dir/centroids/gen-$g"),
+      () => idx.cells.write.mode("overwrite").parquet(s"$dir/$cellsRel/epoch-0"),
+      () => idx.codes.write.mode("overwrite").parquet(s"$dir/$codesRel/epoch-0"))
+    IndexStatePublisher.publish(dir, IndexManifest(g,
+      Map("centroids" -> s"centroids/gen-$g", "cells" -> cellsRel, "codes" -> codesRel),
+      Map("cells" -> 0, "codes" -> 0),
+      Map("n_cells" -> cellCount.get("n").asInstanceOf[Long].toInt)))
   }
 
   def readIvfSq8Index(s: SparkSession, dir: String): IvfSq8Index = {
@@ -847,10 +861,10 @@ object Similarity {
     *     appended = every later epoch's; [[shouldRebuild]] at the
     *     measured default ratio decides;
     *   - not due → report the live geometry (cell count from the
-    *     published centroids; probe count derived by [[probeFor]] —
-    *     the historical grid points (16, 2) and (64, 4) are fixed
-    *     points of that derivation, so no persisted-geometry artifact
-    *     is needed);
+    *     manifest's `n_cells` geometry, recorded by every published
+    *     build and rebuild; probe count derived by [[probeFor]] — the
+    *     historical grid points (16, 2) and (64, 4) are fixed points of
+    *     that derivation, so only the cell count is persisted);
     *   - due → RETRAIN + RE-TUNE: geometry re-derived at the
     *     accumulated count ([[cellsFor]]/[[probeFor]]/[[ivfSampleFor]]
     *     — the d54-gated arithmetic), centroids retrained on a
@@ -870,7 +884,7 @@ object Similarity {
     */
   def maintainIvfSq8IndexDir(s: SparkSession, dir: String, allE: DataFrame,
       maxAppendRatio: Double = RebuildAppendRatio): IvfMaintenance = {
-    import graft.runtime.{IndexManifest, IndexStatePublisher}
+    import graft.runtime.IndexStatePublisher
     IndexStatePublisher.withWriterLock(dir) {
       val m = IndexStatePublisher.current(dir)
       val cellPaths = m.epochPaths(dir, "cells")
@@ -878,7 +892,7 @@ object Similarity {
       val appendedN =
         if (cellPaths.size > 1) s.read.parquet(cellPaths.tail: _*).count() else 0L
       if (!shouldRebuild(indexedN, appendedN, maxAppendRatio)) {
-        val curCells = s.read.parquet(s"$dir/${m.path("centroids")}").count().toInt
+        val curCells = m.geom(dir, "n_cells")
         IvfMaintenance(rebuilt = false, indexedN, appendedN,
           curCells, probeFor(curCells))
       } else {
@@ -897,14 +911,7 @@ object Similarity {
           row_number().over(w).cast("long") - 1)
         val idx = buildIvfSq8IndexWith(allE, ivfCentroids(remapped, nc, ns))
         val g = m.gen + 1
-        graft.runtime.Par.run( // independent writes — overlap (guide §2.6)
-          () => idx.centroids.write.mode("overwrite").parquet(s"$dir/centroids/gen-$g"),
-          () => idx.cells.write.mode("overwrite").parquet(s"$dir/cells-g$g/epoch-0"),
-          () => idx.codes.write.mode("overwrite").parquet(s"$dir/codes-g$g/epoch-0"))
-        IndexStatePublisher.publish(dir, IndexManifest(g,
-          Map("centroids" -> s"centroids/gen-$g", "cells" -> s"cells-g$g",
-            "codes" -> s"codes-g$g"),
-          Map("cells" -> 0, "codes" -> 0)))
+        publishIvfGeneration(idx, dir, g, s"cells-g$g", s"codes-g$g")
         IvfMaintenance(rebuilt = true, n, 0L, nc, np)
       }
     }

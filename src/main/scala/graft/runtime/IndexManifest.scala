@@ -27,14 +27,27 @@ final class IndexLockedException(dir: String, holder: String)
   * index directory. `epochs` counts the visible append-epoch
   * directories of epoch-appended artifacts (e.g. `pairs` with
   * epochs = 2 means `<pairs-dir>/epoch-0,1,2` are all visible).
+  * `geometry` holds the index's named integer layout parameters (`k`,
+  * `rows_per_band`, `bits`, `n_bands`, `n_tables`, `n_buckets`,
+  * `n_cells`): recorded by the family's `writeIndex` in generation 0
+  * and carried by every later generation, so a reader that resolved
+  * the manifest needs no other file to band or bucket correctly.
   */
 final case class IndexManifest(
     gen: Long,
     entries: Map[String, String],
-    epochs: Map[String, Int]) {
+    epochs: Map[String, Int],
+    geometry: Map[String, Int]) {
 
   def path(name: String): String = entries(name)
   def pathOpt(name: String): Option[String] = entries.get(name)
+
+  /** The geometry value `name` of the index at `dir`; fails loudly when
+    * this generation does not record it.
+    */
+  def geom(dir: String, name: String): Int =
+    geometry.getOrElse(name, sys.error(
+      s"index at $dir: manifest generation $gen records no geometry '$name'"))
 
   /** Absolute paths of every visible epoch dir of artifact `name`. */
   def epochPaths(dir: String, name: String): Seq[String] =
@@ -133,6 +146,8 @@ object IndexStatePublisher {
   private val LockFile = "writer.lock"
   private val GenPattern = "^gen-(\\d{16})$".r
   private val EndMarker = "# end "
+  private val EpochsSuffix = ".epochs"
+  private val GeometrySuffix = ".geometry"
 
   /** Default gc grace period: a generation superseded more recently
     * than this survives [[gc]], protecting readers that resolved it
@@ -298,20 +313,23 @@ object IndexStatePublisher {
       catch { case _: Exception => return None }
     var entries = Map.empty[String, String]
     var epochs = Map.empty[String, Int]
+    var geometry = Map.empty[String, Int]
     var complete = false
-    lines.foreach { l =>
+    try lines.foreach { l =>
       if (l.startsWith(EndMarker)) {
         complete = l.stripPrefix(EndMarker).trim.toIntOption
-          .contains(entries.size + epochs.size)
+          .contains(entries.size + epochs.size + geometry.size)
       } else l.split("=", 2) match {
-        case Array(k, v) if k.endsWith(".epochs") =>
-          epochs += (k.stripSuffix(".epochs") -> v.toInt)
+        case Array(k, v) if k.endsWith(EpochsSuffix) =>
+          epochs += (k.stripSuffix(EpochsSuffix) -> v.toInt)
+        case Array(k, v) if k.endsWith(GeometrySuffix) =>
+          geometry += (k.stripSuffix(GeometrySuffix) -> v.toInt)
         case Array(k, v) if k.nonEmpty && !k.startsWith("#") =>
           entries += (k -> v)
         case _ => ()
       }
-    }
-    if (complete) Some(IndexManifest(gen, entries, epochs)) else None
+    } catch { case _: NumberFormatException => return None } // torn mid-number
+    if (complete) Some(IndexManifest(gen, entries, epochs, geometry)) else None
   }
 
   /** The current manifest: the NEWEST generation file that parses as
@@ -333,8 +351,11 @@ object IndexStatePublisher {
         "or written by a pre-manifest build"))
 
   private def manifestBody(m: IndexManifest): Array[Byte] = {
+    // geometry keys carry their own suffix and never enter `entries`:
+    // gc treats every entry value as a path to keep
     val kvs = m.entries.toSeq.sortBy(_._1).map { case (k, v) => s"$k=$v" } ++
-      m.epochs.toSeq.sortBy(_._1).map { case (k, v) => s"$k.epochs=$v" }
+      m.epochs.toSeq.sortBy(_._1).map { case (k, v) => s"$k$EpochsSuffix=$v" } ++
+      m.geometry.toSeq.sortBy(_._1).map { case (k, v) => s"$k$GeometrySuffix=$v" }
     (Seq(s"# graft index manifest generation ${m.gen}") ++ kvs ++
       Seq(s"$EndMarker${kvs.size}"))
       .mkString("", "\n", "\n").getBytes("UTF-8")
@@ -480,7 +501,7 @@ object IndexStatePublisher {
     * plus every generation whose SUCCESSOR manifest is younger than
     * `minAgeMs` (it stopped being current inside the grace window, so
     * an in-flight reader may still hold its paths). Keeps: the manifest
-    * dir, `meta`, the lock file, and every directory any retained
+    * dir, the lock file, and every directory any retained
     * manifest references (including all visible epoch dirs); for
     * top-level dirs with gen-/epoch- children, the referenced children
     * only. Manifest files of non-retained generations are dropped too.
@@ -520,7 +541,7 @@ object IndexStatePublisher {
     fs.listStatus(root).foreach { st =>
       val child = st.getPath
       val fn = child.getName
-      if (fn != ManifestDir && fn != "meta" && fn != LockFile &&
+      if (fn != ManifestDir && fn != LockFile &&
         !fn.startsWith(LockFile + ".broken-") && !referenced(child)) {
         fs.delete(child, true)
       } else if (st.isDirectory && fn != ManifestDir &&
@@ -528,7 +549,7 @@ object IndexStatePublisher {
         // top-level artifact dir with generation/epoch children: prune
         // the unreferenced children (e.g. labels/gen-0..N-1). ONLY
         // gen-/epoch- children are candidates — anything else (parquet
-        // part files of a leaf dir like `meta`) is data, not a version
+        // part files of a referenced leaf dir) is data, not a version
         fs.listStatus(child).foreach { sub =>
           val sn = sub.getPath.getName
           if ((sn.startsWith("gen-") || sn.startsWith("epoch-")) && !referenced(sub.getPath))

@@ -27,7 +27,10 @@ package graft.runtime
   * publish that follows them). An interrupt of the COORDINATING thread
   * while it awaits (the harness watchdog's reach is cancelJobGroup, not
   * thread interrupt, so this is defensive) interrupts the workers,
-  * re-asserts the flag, and propagates — never a silent half-wait.
+  * re-joins them (up to 10 s each: a worker blocked in a Spark job may
+  * ignore the interrupt) so no writer is left running unseen, attaches
+  * every failure collected so far as suppressed, re-asserts the flag,
+  * and propagates — never a silent half-wait.
   */
 object Par {
   def run(thunks: (() => Unit)*): Unit = {
@@ -42,21 +45,21 @@ object Par {
       th.start()
       th
     }
+    def withRest(e: Throwable): Throwable = {
+      failures.forEach(f => if (f ne e) e.addSuppressed(f))
+      e
+    }
     try threads.foreach(_.join())
     catch {
       case ie: InterruptedException =>
         threads.foreach(_.interrupt())
+        // the exception cleared this thread's flag, so these joins wait;
+        // the flag is restored for the caller below
+        threads.foreach(th => try th.join(10000) catch { case _: InterruptedException => () })
         Thread.currentThread().interrupt()
-        throw ie
+        throw withRest(ie)
     }
-    val first = failures.poll()
-    if (first != null) {
-      var next = failures.poll()
-      while (next != null) {
-        if (next ne first) first.addSuppressed(next)
-        next = failures.poll()
-      }
-      throw first
-    }
+    val first = failures.peek()
+    if (first != null) throw withRest(first)
   }
 }

@@ -1,6 +1,7 @@
 package graft.llm
 
 import org.scalatest.funsuite.AnyFunSuite
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.mr.TestSession
 import graft.runtime.{ConcurrentPublishException, IndexLockedException,
@@ -10,8 +11,9 @@ import graft.runtime.{ConcurrentPublishException, IndexLockedException,
   * VERDICT asks #1 and #7): a reader concurrent with any
   * append/delete/compact can never see a torn or empty label set, two
   * writers can never interleave, the capped posture is
-  * rerun-reproducible through its persisted ledger, and GC reclaims
-  * exactly the unreferenced generations.
+  * rerun-reproducible through its persisted ledger, GC reclaims
+  * exactly the unreferenced generations, and the geometry each
+  * `writeIndex` records in the manifest survives every mutation kind.
   */
 class IndexPublicationSpec extends AnyFunSuite {
   lazy val spark = TestSession.spark
@@ -39,22 +41,31 @@ class IndexPublicationSpec extends AnyFunSuite {
   )
   private def docsDf = fixture.toDF("doc_id", "text")
 
+  private def sigsOf(d: DataFrame) = d
+    .select(col("doc_id"), graft.functions.SimHashSig(col("text"), 32).as("sig"))
+    .where(col("sig") =!= lit(graft.functions.SimHashSig.Empty))
+
   test("manifest publish is CAS: the second writer of a generation is rejected") {
     val tmp = java.nio.file.Files.createTempDirectory("manifestcas").toString
     try {
-      val m = IndexManifest(0L, Map("labels" -> "labels/gen-0"), Map.empty)
+      val m = IndexManifest(0L, Map("labels" -> "labels/gen-0"), Map.empty, Map.empty)
       IndexStatePublisher.publish(tmp, m)
       intercept[ConcurrentPublishException] {
         IndexStatePublisher.publish(tmp, m.copy(entries = Map("labels" -> "other")))
       }
       // the loser did not clobber the winner
       assert(IndexStatePublisher.current(tmp).path("labels") == "labels/gen-0")
-      // round-trip fidelity, epochs included
+      // round-trip fidelity, epochs and geometry included; geometry never
+      // becomes an entry (gc keeps every entry value as a path)
       IndexStatePublisher.publish(tmp,
         IndexManifest(1L, Map("labels" -> "labels/gen-1", "pairs" -> "pairs"),
-          Map("pairs" -> 3)))
+          Map("pairs" -> 3), Map("k" -> 32, "n_buckets" -> 8)))
       val cur = IndexStatePublisher.current(tmp)
       assert(cur.gen == 1L && cur.epochs("pairs") == 3)
+      assert(cur.geometry == Map("k" -> 32, "n_buckets" -> 8))
+      assert(cur.entries.keySet == Set("labels", "pairs"))
+      assert(intercept[RuntimeException](cur.geom(tmp, "bits")).getMessage
+        .contains(s"index at $tmp: manifest generation 1 records no geometry 'bits'"))
       assert(cur.epochPaths(tmp, "pairs").size == 4)
     } finally {
       org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(tmp))
@@ -240,7 +251,7 @@ class IndexPublicationSpec extends AnyFunSuite {
     IndexStatePublisher.forceGenericAtomics = true
     try {
       // CAS: the second writer of a generation is rejected
-      val m = IndexManifest(0L, Map("labels" -> "labels/gen-0"), Map.empty)
+      val m = IndexManifest(0L, Map("labels" -> "labels/gen-0"), Map.empty, Map.empty)
       IndexStatePublisher.publish(tmp, m)
       intercept[ConcurrentPublishException] {
         IndexStatePublisher.publish(tmp, m.copy(entries = Map("labels" -> "other")))
@@ -323,13 +334,13 @@ class IndexPublicationSpec extends AnyFunSuite {
     IndexStatePublisher.registerExclusiveCreator("file", fake)
     try {
       IndexStatePublisher.publish(tmp,
-        IndexManifest(0L, Map("labels" -> "labels/gen-0"), Map.empty))
+        IndexManifest(0L, Map("labels" -> "labels/gen-0"), Map.empty, Map.empty))
       assert(calls.get() >= 1, "manifest CAS must dispatch through the creator")
       val afterPublish = calls.get()
       // CAS loss still surfaces through the seam
       intercept[ConcurrentPublishException] {
         IndexStatePublisher.publish(tmp,
-          IndexManifest(0L, Map("labels" -> "other"), Map.empty))
+          IndexManifest(0L, Map("labels" -> "other"), Map.empty, Map.empty))
       }
       // the writer lock routes through it too
       assert(IndexStatePublisher.withWriterLock(tmp) { 5 } == 5)
@@ -345,7 +356,7 @@ class IndexPublicationSpec extends AnyFunSuite {
     try {
       val before = calls.get()
       IndexStatePublisher.publish(tmp2,
-        IndexManifest(0L, Map("labels" -> "labels/gen-0"), Map.empty))
+        IndexManifest(0L, Map("labels" -> "labels/gen-0"), Map.empty, Map.empty))
       assert(calls.get() == before, "unregistered creator must not be called")
     } finally {
       org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(tmp2))
@@ -356,22 +367,28 @@ class IndexPublicationSpec extends AnyFunSuite {
     val tmp = java.nio.file.Files.createTempDirectory("tornmanifest").toString
     try {
       IndexStatePublisher.publish(tmp,
-        IndexManifest(0L, Map("labels" -> "labels/gen-0"), Map.empty))
+        IndexManifest(0L, Map("labels" -> "labels/gen-0"), Map.empty, Map("n_buckets" -> 32)))
       // a crashed publisher's corpse: gen-1 exists but is truncated
-      // mid-write (no `# end` terminator) — and an empty gen-2
+      // mid-write (no `# end` terminator) — an empty gen-2 — and two
+      // files torn inside a geometry line: gen-3 mid-value ("32" cut to
+      // "3", still a number) and gen-4 right after the `=`
       val md = java.nio.file.Paths.get(tmp, "manifest")
-      java.nio.file.Files.write(md.resolve(f"gen-${1L}%016d"),
-        "# graft index manifest generation 1\nlabels=labels/gen".getBytes("UTF-8"))
-      java.nio.file.Files.write(md.resolve(f"gen-${2L}%016d"), Array.empty[Byte])
+      def plant(g: Long, body: String): Unit =
+        java.nio.file.Files.write(md.resolve(f"gen-$g%016d"), body.getBytes("UTF-8"))
+      plant(1L, "# graft index manifest generation 1\nlabels=labels/gen")
+      plant(2L, "")
+      plant(3L, "# graft index manifest generation 3\nlabels=labels/gen-3\nn_buckets.geometry=3")
+      plant(4L, "# graft index manifest generation 4\nlabels=labels/gen-4\nn_buckets.geometry=")
       val cur = IndexStatePublisher.current(tmp)
-      assert(cur.gen == 0L && cur.path("labels") == "labels/gen-0",
+      assert(cur.gen == 0L && cur.path("labels") == "labels/gen-0" &&
+        cur.geometry == Map("n_buckets" -> 32),
         "reader must skip incomplete manifests and fall back")
       // a YOUNG incomplete same-gen file is NOT healed (r18 ADVICE #1):
       // it may be a live writer mid-flush on a visible-before-complete
       // scheme — healing it would let two same-gen writers both win
       intercept[ConcurrentPublishException] {
         IndexStatePublisher.publish(tmp,
-          IndexManifest(1L, Map("labels" -> "labels/gen-1"), Map.empty))
+          IndexManifest(1L, Map("labels" -> "labels/gen-1"), Map.empty, Map.empty))
       }
       // the crashed-publisher corpse is by definition OLD: once the
       // incomplete file ages past the heal bound, the recovered writer
@@ -380,7 +397,7 @@ class IndexPublicationSpec extends AnyFunSuite {
         java.nio.file.attribute.FileTime.fromMillis(
           System.currentTimeMillis() - 2 * IndexStatePublisher.CorpseHealAgeMs))
       IndexStatePublisher.publish(tmp,
-        IndexManifest(1L, Map("labels" -> "labels/gen-1"), Map.empty))
+        IndexManifest(1L, Map("labels" -> "labels/gen-1"), Map.empty, Map.empty))
       assert(IndexStatePublisher.current(tmp).path("labels") == "labels/gen-1")
     } finally {
       org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(tmp))
@@ -437,7 +454,7 @@ class IndexPublicationSpec extends AnyFunSuite {
         java.nio.file.Files.createDirectories(d)
         java.nio.file.Files.write(d.resolve("part-0.parquet"), Array[Byte](1))
         IndexStatePublisher.publish(tmp,
-          IndexManifest(g, Map("labels" -> s"labels/gen-$g"), Map.empty))
+          IndexManifest(g, Map("labels" -> s"labels/gen-$g"), Map.empty, Map.empty))
       }
       plantGen(0L); plantGen(1L)
       // gen-0 was superseded by gen-1 JUST NOW: default gc keeps it —
@@ -592,9 +609,6 @@ class IndexPublicationSpec extends AnyFunSuite {
     // empty gates nothing) — 8 bands of 4 bits over sf0.001 gives
     // bucket populations well above 8
     val docs = graft.Tables.documents(spark, sf)
-    def sigsOf(d: org.apache.spark.sql.DataFrame) = d
-      .select(col("doc_id"), graft.functions.SimHashSig(col("text"), 32).as("sig"))
-      .where(col("sig") =!= lit(graft.functions.SimHashSig.Empty))
     val cap = 8
     val tmp = java.nio.file.Files.createTempDirectory("capledger").toString
     try {
@@ -638,6 +652,148 @@ class IndexPublicationSpec extends AnyFunSuite {
           s"${afterDelete.size} vs ${rerunSurv.size}")
     } finally {
       org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(tmp))
+    }
+  }
+
+  // Geometry lives in the published manifest: each family records it in
+  // generation 0 and every mutation kind publishes it unchanged. The
+  // layouts below are off the defaults, so a mutation that re-derived
+  // geometry from defaults instead of the manifest shows.
+  private def withDir(prefix: String)(body: String => Unit): Unit = {
+    val dir = java.nio.file.Files.createTempDirectory(prefix).toString
+    try body(dir)
+    finally org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
+  }
+
+  private def assertGeometry(dir: String, want: Map[String, Int], after: String): Unit = {
+    val got = IndexStatePublisher.current(dir).geometry
+    assert(got == want, s"geometry after $after: $got, recorded $want")
+  }
+
+  test("minhash: append, delete, compact and rebuildLedgered keep the recorded geometry") {
+    val docs = graft.Tables.documents(spark, sf)
+    val want = Map("k" -> 32, "rows_per_band" -> 4, "n_buckets" -> 4)
+    val dead = docs.where(col("doc_id") % 7 === 3).select(col("doc_id"))
+    withDir("geomdedup") { dir =>
+      IncrementalDedup.writeIndex(
+        IncrementalDedup.buildIndex(docs.where(col("doc_id") % 3 === 0), rowsPerBand = 4),
+        dir, rowsPerBand = 4, nBuckets = 4)
+      assertGeometry(dir, want, "writeIndex")
+      IncrementalDedup.appendToIndex(spark, dir,
+        docs.where(col("doc_id") % 3 <= 1), docs.where(col("doc_id") % 3 === 1))
+      assertGeometry(dir, want, "append")
+      IncrementalDedup.deleteFromIndex(spark, dir, dead)
+      assertGeometry(dir, want, "delete")
+      IncrementalDedup.compactIndex(spark, dir)
+      assertGeometry(dir, want, "compact")
+      val idx = IncrementalDedup.readIndex(spark, dir)
+      assert((idx.bandK, idx.bandRows, idx.nBuckets) == (32, 4, 4))
+    }
+    withDir("geomdedupled") { dir =>
+      val (idx0, over0) = IncrementalDedup.buildIndexWithLedger(
+        docs.where(col("doc_id") % 3 === 0), k = 32, rowsPerBand = 4,
+        bucketCap = IncrementalDedup.LedgerCap)
+      IncrementalDedup.writeIndex(idx0, dir, k = 32, rowsPerBand = 4,
+        nBuckets = 4, capLedger0 = Some(over0))
+      IncrementalDedup.appendToIndex(spark, dir,
+        docs.where(col("doc_id") % 3 <= 1), docs.where(col("doc_id") % 3 === 1),
+        bucketCap = IncrementalDedup.LedgerCap)
+      assertGeometry(dir, want, "capped append")
+      IncrementalDedup.deleteFromIndex(spark, dir, dead)
+      assertGeometry(dir, want, "ledgered delete")
+      IncrementalDedup.rebuildLedgered(spark, dir,
+        docs.where(col("doc_id") % 3 <= 1 && col("doc_id") % 7 =!= 3),
+        IncrementalDedup.LedgerCap)
+      assertGeometry(dir, want, "rebuildLedgered")
+    }
+  }
+
+  test("signature: append, delete, compact and rebuildLedgered keep the recorded geometry") {
+    val docs = graft.Tables.documents(spark, sf)
+    val base = sigsOf(docs.where(col("doc_id") % 3 === 0)).localCheckpoint(true)
+    val delta = sigsOf(docs.where(col("doc_id") % 3 === 1))
+    val dead = docs.where(col("doc_id") % 7 === 3).select(col("doc_id"))
+    val want = Map("bits" -> 32, "n_bands" -> 8, "n_buckets" -> 4)
+    withDir("geomsig") { dir =>
+      IncrementalSig.writeIndex(base, IncrementalSig.buildPairs(base, 32, 8, 7), dir,
+        32, 8, nBuckets = 4)
+      assertGeometry(dir, want, "writeIndex")
+      IncrementalSig.appendToIndex(spark, dir, delta, 7)
+      assertGeometry(dir, want, "append")
+      IncrementalSig.deleteDocs(spark, dir, dead)
+      assertGeometry(dir, want, "delete")
+      IncrementalSig.compactIndex(spark, dir)
+      assertGeometry(dir, want, "compact")
+    }
+    withDir("geomsigled") { dir =>
+      val cap = 8
+      val (pairs0, over0) = IncrementalSig.buildPairsWithLedger(base, 32, 8, 7, cap)
+      IncrementalSig.writeIndex(base, pairs0, dir, 32, 8, nBuckets = 4,
+        capLedger0 = Some(over0))
+      IncrementalSig.appendToIndex(spark, dir, delta, 7, bucketCap = cap)
+      assertGeometry(dir, want, "capped append")
+      IncrementalSig.deleteDocs(spark, dir, dead)
+      assertGeometry(dir, want, "ledgered delete")
+      IncrementalSig.rebuildLedgered(spark, dir, 7, cap)
+      assertGeometry(dir, want, "rebuildLedgered")
+    }
+  }
+
+  test("semantic: append, delete, compact and rebuildLedgered keep the recorded geometry") {
+    val all = graft.Tables.embeddings(spark, sf)
+      .select(col("vec_id"), col("embedding"))
+      .withColumn("nrm", sqrt(graft.functions.FloatVecDot(col("embedding"), col("embedding"))))
+      .localCheckpoint(true)
+    val dead = all.where(col("vec_id") % 7 === 3).select(col("vec_id"))
+    val want = Map("n_buckets" -> 4, "n_tables" -> 8, "bits" -> 4)
+    withDir("geomsem") { dir =>
+      val corpusE = IncrementalSemantic.withSigs(all).localCheckpoint(true)
+      val pairs = IncrementalSemantic.corpusPairs(corpusE).localCheckpoint(true)
+      IncrementalSemantic.writeIndex(corpusE, DedupResolve.resolveClusters(pairs), dir,
+        nBuckets = 4, pairs = Some(pairs))
+      assertGeometry(dir, want, "writeIndex")
+      IncrementalSemantic.deleteVectors(spark, dir, dead)
+      assertGeometry(dir, want, "delete")
+      IncrementalSemantic.compactIndex(spark, dir)
+      assertGeometry(dir, want, "compact")
+    }
+    withDir("geomsemled") { dir =>
+      val cap = IncrementalSemantic.semLedgerCap(all.count())
+      val base = IncrementalSemantic.withSigs(all.filter(col("vec_id") % 3 === 0))
+        .localCheckpoint(true)
+      val (pairs0, over0) = IncrementalSemantic.corpusPairsWithLedger(base, cap)
+      val pairs0c = pairs0.localCheckpoint(true)
+      IncrementalSemantic.writeIndex(base, DedupResolve.resolveClusters(pairs0c), dir,
+        nBuckets = 4, pairs = Some(pairs0c), capLedger0 = Some(over0))
+      IncrementalSemantic.appendToIndex(spark, dir,
+        all.filter(col("vec_id") % 3 <= 1), all.filter(col("vec_id") % 3 === 1),
+        bucketCap = cap)
+      assertGeometry(dir, want, "capped append")
+      IncrementalSemantic.deleteVectors(spark, dir, dead)
+      assertGeometry(dir, want, "ledgered delete")
+      val surv = all.filter(col("vec_id") % 3 <= 1 && col("vec_id") % 7 =!= 3)
+        .localCheckpoint(true)
+      IncrementalSemantic.rebuildLedgered(spark, dir, surv,
+        IncrementalSemantic.semLedgerCap(surv.count()))
+      assertGeometry(dir, want, "rebuildLedgered")
+    }
+  }
+
+  test("contamination: writeIndex publishes a generation-0 manifest with its geometry") {
+    val docs = graft.Tables.documents(spark, sf)
+    val bgrams = SpanDedup.benchGrams(docs.where(col("doc_id") % 10 === 0), 8)
+      .localCheckpoint(true)
+    val bloom = bgrams.stat.bloomFilter("gk", math.max(bgrams.count(), 1L), 0.01)
+    val spans = SpanDedup.contamIslands(SpanDedup.contamHitsWithSketch(
+      docs.where(col("doc_id") % 10 =!= 0), bloom, bgrams, 8), 8)
+    withDir("geomcontam") { dir =>
+      IncrementalContam.writeIndex(IncrementalContam.ContamIndex(bloom, bgrams, spans),
+        dir, nBuckets = 4)
+      val m = IndexStatePublisher.current(dir)
+      assert(m.gen == 0L && m.geometry == Map("n_buckets" -> 4))
+      assert(!new java.io.File(s"$dir/meta").exists, "no side meta file")
+      val idx = IncrementalContam.readIndex(spark, dir)
+      assert(idx.grams.count() == bgrams.count() && idx.spans.count() == spans.count())
     }
   }
 }

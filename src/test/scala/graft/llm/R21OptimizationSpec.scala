@@ -4,36 +4,17 @@ import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 import graft.mr.TestSession
 
-/** Focused pins for the round-21 optimization internals: the per-dir
-  * meta-read cache ([[graft.runtime.MetaCache]]), the enriched
-  * [[graft.runtime.Par]] failure contract (suppressed siblings), the
-  * resolve-before-write delete paths (deleteVectors / deleteFromIndex
-  * return labels identical to the published artifact), and the
-  * CpSlot-compatible checkpoint clamp (clamped frames keep the bare
-  * LogicalRDD plan the BPE release machinery pattern-matches).
+/** Focused pins for the round-21 optimization internals: the enriched
+  * [[graft.runtime.Par]] failure contract (suppressed siblings, also on
+  * the coordinator-interrupt path), the resolve-before-write delete
+  * paths (deleteVectors / deleteFromIndex return labels identical to the
+  * published artifact), the CpSlot-compatible checkpoint clamp (clamped
+  * frames keep the bare LogicalRDD plan the BPE release machinery
+  * pattern-matches), and the bench stdout line's escaped env_note budget.
   */
 class R21OptimizationSpec extends AnyFunSuite {
   lazy val spark = TestSession.spark
   import spark.implicits._
-
-  test("MetaCache: caches per dir, invalidate picks up a rewrite") {
-    val dir = graft.runtime.IndexStore.tempIndexDir("graft-metacache")
-    spark.range(1).selectExpr("42 AS n_buckets", "8 AS n_tables", "4 AS bits")
-      .write.mode("overwrite").parquet(s"$dir/meta")
-    graft.runtime.MetaCache.invalidate(dir)
-    val r1 = graft.runtime.MetaCache.row(spark, dir)
-    assert(r1.getInt(0) == 42 && r1.getInt(1) == 8 && r1.getInt(2) == 4)
-    // second read is served from the cache: the SAME Row instance
-    val r2 = graft.runtime.MetaCache.row(spark, dir)
-    assert(r1 eq r2, "second meta read must hit the cache")
-    // a rewrite + invalidate is visible; without invalidate it would not be
-    spark.range(1).selectExpr("7 AS n_buckets", "8 AS n_tables", "4 AS bits")
-      .write.mode("overwrite").parquet(s"$dir/meta")
-    assert(graft.runtime.MetaCache.row(spark, dir).getInt(0) == 42,
-      "stale-by-design until invalidated")
-    graft.runtime.MetaCache.invalidate(dir)
-    assert(graft.runtime.MetaCache.row(spark, dir).getInt(0) == 7)
-  }
 
   test("Par.run: sibling failures are attached as suppressed, not swallowed") {
     val e = intercept[RuntimeException] {
@@ -45,6 +26,47 @@ class R21OptimizationSpec extends AnyFunSuite {
     val all = (e.getMessage +: e.getSuppressed.toSeq.map(_.getMessage)).toSet
     assert(all == Set("first", "second"),
       s"one failure rethrown, the other suppressed; got $all")
+
+    // the coordinator interrupted while a thunk blocks: the workers are
+    // interrupted AND re-joined before the rethrow, and the failures they
+    // left behind ride along as suppressed
+    val started = new java.util.concurrent.CountDownLatch(1)
+    @volatile var worker: Thread = null
+    @volatile var outcome: Throwable = null
+    val coordinator = new Thread(() => {
+      try graft.runtime.Par.run(
+        () => { worker = Thread.currentThread(); started.countDown(); Thread.sleep(60000) },
+        () => ())
+      catch { case t: Throwable => outcome = t }
+    })
+    coordinator.start()
+    started.await()
+    coordinator.interrupt()
+    coordinator.join(30000)
+    assert(!coordinator.isAlive, "the interrupted coordinator must return")
+    assert(outcome.isInstanceOf[InterruptedException], s"got $outcome")
+    assert(!worker.isAlive, "the blocked worker must be re-joined, not orphaned")
+    assert(outcome.getSuppressed.exists(_.isInstanceOf[InterruptedException]),
+      "the worker's failure must be attached as suppressed")
+  }
+
+  test("Bench env_note: escaped first, then cut to 60 chars on whole escapes") {
+    import graft.Bench.jescWithin
+    assert(jescWithin("plain note", 60) == "plain note")
+    // 59 plain chars + a quote: the 2-char escape does not fit whole
+    assert(jescWithin("a" * 59 + "\"", 60) == "a" * 59)
+    // every char escapes to 6: the budget holds 10 whole escapes
+    val ctl = jescWithin("\u0001" * 100, 60)
+    assert(ctl == "\\u0001" * 10)
+    // a surrogate pair is never split
+    assert(jescWithin("a" * 59 + "\uD83D\uDE00", 60) == "a" * 59)
+    // whole escapes only: the cut is valid JSON and decodes to a prefix
+    val json = new com.fasterxml.jackson.databind.ObjectMapper()
+    Seq("\"" * 100, "\\" * 100, "x\ny" * 40, "a\"" * 40).foreach { raw =>
+      val out = jescWithin(raw, 60)
+      assert(out.length <= 60, out)
+      assert(raw.startsWith(json.readTree("\"" + out + "\"").asText), out)
+    }
   }
 
   test("deleteVectors: returned labels equal the published artifact (resolve-before-write)") {

@@ -173,6 +173,8 @@ class RebuildLedgeredSpec extends AnyFunSuite {
     try {
       Similarity.writeIvfSq8Index(
         Similarity.buildIvfSq8IndexFrom(corpus, nCells = 16, sampleN = 200), idxDir)
+      // the live cell count is manifest geometry, carried through appends
+      assert(IndexStatePublisher.current(idxDir).geometry == Map("n_cells" -> 16))
       // small append: 10% < the 0.2 trigger — NOT due; live geometry reported
       val d1 = all.filter(col("vec_id") >= 400 && col("vec_id") < 440)
       Similarity.appendVectorsToIndexDir(spark, idxDir, d1)
@@ -181,6 +183,7 @@ class RebuildLedgeredSpec extends AnyFunSuite {
       assert(!r1.rebuilt && r1.nCells == 16 && r1.nProbe == 2,
         s"below-ratio maintenance must be a no-op: $r1")
       assert(r1.indexedN == 400 && r1.appendedN == 40, s"trigger counts: $r1")
+      assert(IndexStatePublisher.current(idxDir).geometry == Map("n_cells" -> 16))
       // second append pushes past the ratio — due; wrong corpus refused
       val d2 = all.filter(col("vec_id") >= 440 && col("vec_id") < 500)
       Similarity.appendVectorsToIndexDir(spark, idxDir, d2)
@@ -197,6 +200,7 @@ class RebuildLedgeredSpec extends AnyFunSuite {
       val m = IndexStatePublisher.current(idxDir)
       assert(m.gen == genBefore + 1 && m.epochs("cells") == 0,
         s"rebuild must republish with collapsed epochs: gen ${m.gen}, ${m.epochs}")
+      assert(m.geometry == Map("n_cells" -> r2.nCells), s"rebuilt geometry: ${m.geometry}")
       val idx = Similarity.readIvfSq8Index(spark, idxDir)
       assert(idx.cells.count() == 500 && idx.codes.count() == 500,
         "rebuilt artifact must cover the accumulated corpus")
